@@ -3,9 +3,10 @@
 
 - ``compact``: rewrite a parquet table into sized files, sorted by the
   clustering keys (the data-layout effect of Z-ORDER for one key prefix:
-  min/max stats become selective, so scan-level skipping works);
-- ``vacuum_snapshots``: drop superseded Scd2Table snapshot versions,
-  keeping the newest N (VACUUM's retention semantics).
+  min/max stats become selective, so scan-level skipping works).
+
+VACUUM of superseded snapshot versions is ``Scd2Table.vacuum``: the
+snapshot layout is that class's business.
 
 On Delta/Iceberg these become one-line SQL calls; the interface stays.
 """
@@ -186,28 +187,6 @@ def recover_compact(path: str) -> str:
             shutil.rmtree(tmp)
         return "rolled_back"
     raise FileNotFoundError(f"no table, backup, or complete tmp at {path}")
-
-
-def vacuum_snapshots(table_path: str, keep: int = 2) -> list[str]:
-    """Remove old ``v<N>`` snapshot dirs of an Scd2Table, keeping the
-    current one plus ``keep-1`` predecessors. Returns removed dirs."""
-    marker = os.path.join(table_path, "_CURRENT")
-    if not os.path.exists(marker):
-        return []
-    with open(marker) as fh:
-        current = int(fh.read().strip())
-    removed = []
-    for entry in sorted(os.listdir(table_path)):
-        if entry.startswith("v") and entry[1:].isdigit():
-            v = int(entry[1:])
-        elif entry.startswith("_v") and entry[2:].isdigit():
-            v = int(entry[2:])  # pre-rename snapshot dirs vacuum too
-        else:
-            continue
-        if v <= current - keep:
-            shutil.rmtree(os.path.join(table_path, entry))
-            removed.append(entry)
-    return removed
 
 
 def delete_rows(

@@ -26,6 +26,7 @@ data skipping come from the table format, not from this file.
 from __future__ import annotations
 
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -72,12 +73,6 @@ class Scd2Table:
             return None
         target = os.path.join(self.path, f"v{v}")
         if not os.path.isdir(target):
-            # tables written before the v<N> rename stored snapshots as
-            # _v<N>; fall back so they stay readable (Spark logs a
-            # harmless hidden-path WARN on them — new writes don't)
-            legacy = os.path.join(self.path, f"_v{v}")
-            if os.path.isdir(legacy):
-                return self._read_snapshot_dir(legacy)
             raise FileNotFoundError(f"snapshot version {v} not found (vacuumed?)")
         return self._read_snapshot_dir(target)
 
@@ -119,17 +114,28 @@ class Scd2Table:
         )
 
     def history(self) -> list[int]:
-        """Available snapshot versions, oldest first (both the current
-        ``v<N>`` naming and the pre-rename ``_v<N>`` dirs count)."""
+        """Available snapshot versions, oldest first."""
         if not os.path.isdir(self.path):
             return []
-        vs = set()
-        for e in os.listdir(self.path):
-            if e.startswith("v") and e[1:].isdigit():
-                vs.add(int(e[1:]))
-            elif e.startswith("_v") and e[2:].isdigit():
-                vs.add(int(e[2:]))
-        return sorted(vs)
+        return sorted(
+            int(e[1:])
+            for e in os.listdir(self.path)
+            if e.startswith("v") and e[1:].isdigit()
+        )
+
+    def vacuum(self, keep: int = 2) -> list[str]:
+        """Remove old snapshot dirs, keeping the current one plus
+        ``keep-1`` predecessors (the Delta ``VACUUM`` idea over the
+        snapshot log). Returns the removed dir names."""
+        current = self._current_version()
+        if current is None:
+            return []
+        removed = []
+        for v in self.history():
+            if v <= current - keep:
+                shutil.rmtree(os.path.join(self.path, f"v{v}"))
+                removed.append(f"v{v}")
+        return removed
 
     def _write_snapshot(self, df: DataFrame) -> None:
         v = (self._current_version() or 0) + 1
@@ -177,9 +183,6 @@ class Scd2Table:
         dirs = []
         for v in range(starting_version, end + 1):
             d = os.path.join(self.path, "cdf", f"v{v}")
-            if not os.path.isdir(d):
-                # pre-rename tables stored the feed under _cdf/_v<N>
-                d = os.path.join(self.path, "_cdf", f"_v{v}")
             if os.path.isdir(d):
                 dirs.append(d)
         if not dirs:

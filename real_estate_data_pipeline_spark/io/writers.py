@@ -14,21 +14,19 @@ def write_parquet(
     path: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-    compression: str = "zstd",
-    dynamic_overwrite: bool = True,
 ) -> None:
-    """zstd by default: ~30% smaller than snappy at similar scan speed —
-    at 100 TB that is tens of TB of storage and IO.
+    """zstd: ~30% smaller than snappy at similar scan speed — at 100 TB
+    that is tens of TB of storage and IO.
 
-    ``dynamic_overwrite`` (the default, matching Delta's ``replaceWhere``
-    intent): a partitioned ``mode='overwrite'`` rewrites ONLY the
-    partitions present in ``df``. Without it Spark's static mode drops
-    every other partition of the table first — on a 100 TB table a
-    one-day re-run would silently delete years of history."""
-    w = df.write.mode(mode).option("compression", compression)
+    A partitioned ``mode='overwrite'`` is dynamic (matching Delta's
+    ``replaceWhere`` intent): it rewrites ONLY the partitions present in
+    ``df``. Spark's static mode would drop every other partition of the
+    table first — on a 100 TB table a one-day re-run would silently
+    delete years of history."""
+    w = df.write.mode(mode).option("compression", "zstd")
     if partition_by:
         w = w.partitionBy(*partition_by)
-        if mode == "overwrite" and dynamic_overwrite:
+        if mode == "overwrite":
             w = w.option("partitionOverwriteMode", "dynamic")
     w.parquet(path)
 

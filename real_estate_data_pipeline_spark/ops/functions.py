@@ -194,14 +194,6 @@ def hash_id(*cols: Column) -> Column:
     return F.sha2(F.concat_ws("_", *cols), 256)
 
 
-def hash_bucket(c: Column, n_buckets: int) -> Column:
-    """F12 — murmur3 hash-bucket encoding ``abs(hash(c)) % n``.
-    Ref: gold_ml_etl.py:195-201,271-286. Note: Spark murmur3 is not
-    reproducible in other engines; use :func:`stable_bucket` when
-    cross-engine determinism matters."""
-    return F.pmod(F.abs(F.hash(c)), F.lit(n_buckets)).cast("int")
-
-
 def stable_bucket(c: Column, n_buckets: int) -> Column:
     """F12 (portable variant) — bucket from the first 8 hex chars of
     sha2-256, reproducible in any engine with sha256+conv."""
@@ -247,11 +239,6 @@ def partition_cols(ts: Column) -> dict[str, Column]:
 def calendar_cols(ts: Column) -> dict[str, Column]:
     """D5 — year/quarter/month decomposition. Ref: gold_ml_etl.py:314-321."""
     return {"year": F.year(ts), "quarter": F.quarter(ts), "month": F.month(ts)}
-
-
-def freshness_hours(ts: Column, now: Column) -> Column:
-    """D7 — age in hours. Ref: data_quality_checks.py:122-126."""
-    return (F.unix_timestamp(now) - F.unix_timestamp(ts)) / F.lit(3600.0)
 
 
 # ---------------------------------------------------------------------------
@@ -321,12 +308,6 @@ def hectare_to_m2(c: Column) -> Column:
 def extract_struct_field(arr: Column, field: str) -> Column:
     """N1 — transform(arr, x -> x.field). Ref: silver_etl_script.py:226-240."""
     return F.transform(arr, lambda x: x.getField(field))
-
-
-def flatten_nested(arr: Column, field: str) -> Column:
-    """N2 — flatten(transform(arr, x -> x.field)).
-    Ref: transformation_utils.py:670-673."""
-    return F.flatten(extract_struct_field(arr, field))
 
 
 def distinct_double_transform(arr: Column, outer: str, inner: str) -> Column:

@@ -94,30 +94,6 @@ def fingerprint(c: Column) -> Column:
     return F.sha2(normalize_for_fingerprint(c), 256)
 
 
-def rolling_hash_fingerprint(c: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint: min xxhash64 over word n-gram windows
-    of the normalized text (deterministic; Spark-side only)."""
-    toks = F.split(normalize_for_fingerprint(c), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, window)))
-    return F.array_min(F.transform(grams, lambda g: F.xxhash64(g)))
-
-
-def analyze_documents(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass document profile: language, quality, tokens, fingerprint."""
-    c = F.col(text_col)
-    feats = quality_features(c)
-    return df.select(
-        F.col(id_col),
-        lang_id(c).alias("lang_pred"),
-        feats["n_tokens"].alias("n_tokens"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        quality_score(c).alias("quality_score"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 # --- PII scrubbing (corpus-safety pass) -------------------------------------
 # Patterns are deliberately RE2-compatible (no lookarounds) so the same
 # regex runs identically in Spark (Java regex) and the DuckDB oracle.

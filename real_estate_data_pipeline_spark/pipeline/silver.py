@@ -35,6 +35,10 @@ from ..quality.checks import QualityChecker
 from ..schema.conform import conform
 from ..schema.sources import SILVER_SCHEMA, SOURCE_SPECS, VALIDATION, SourceSpec
 
+# cleanse nulls out (does not drop) prices this many stddevs from the mean
+OUTLIER_COLS = ("min_selling_price", "max_selling_price")
+OUTLIER_SIGMA = 4.0
+
 
 @dataclass
 class SilverResult:
@@ -53,19 +57,8 @@ class SilverResult:
 
 
 class SilverPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        specs: dict[str, SourceSpec] | None = None,
-        validation=VALIDATION,
-        outlier_cols: tuple[str, ...] = ("min_selling_price", "max_selling_price"),
-        outlier_sigma: float = 4.0,
-    ) -> None:
+    def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
-        self.specs = specs or SOURCE_SPECS
-        self.validation = validation
-        self.outlier_cols = outlier_cols
-        self.outlier_sigma = outlier_sigma
 
     # -- stage 2: schema mapping -------------------------------------------
     def map_source(self, df: DataFrame, spec: SourceSpec) -> DataFrame:
@@ -100,22 +93,17 @@ class SilverPipeline:
         out = df.select(*selected).withColumn("spider_name", F.lit(spec.name))
         return conform(out, SILVER_SCHEMA)
 
-    def map_all(self, bronze: DataFrame | dict[str, DataFrame]) -> DataFrame:
+    def map_all(self, bronze: dict[str, DataFrame]) -> DataFrame:
         """Per-source map -> U1 unionByName fold (silver_etl_script.py:
-        167,504-508). Preferred input is a dict of per-source DataFrames,
-        each read with its own schema — a single inferred-schema scan of
-        mixed sources (the reference's approach) makes conflicting nested
-        types collapse to strings (SURVEY §7.4.5). A single DataFrame is
-        still accepted and split on spider_name. Every branch conforms to
-        the same schema, so the union is plan-only (no shuffle)."""
-        if isinstance(bronze, DataFrame):
-            bronze = {
-                name: bronze.filter(F.col("spider_name") == name) for name in self.specs
-            }
+        167,504-508). Input is a dict of per-source DataFrames, each read
+        with its own schema — a single inferred-schema scan of mixed
+        sources (the reference's approach) makes conflicting nested types
+        collapse to strings (SURVEY §7.4.5). Every branch conforms to the
+        same schema, so the union is plan-only (no shuffle)."""
         parts = [
-            self.map_source(df, self.specs[name])
+            self.map_source(df, SOURCE_SPECS[name])
             for name, df in bronze.items()
-            if name in self.specs
+            if name in SOURCE_SPECS
         ]
         out = parts[0]
         for p in parts[1:]:
@@ -130,13 +118,13 @@ class SilverPipeline:
         it once both branches are consumed (run() threads it through
         SilverResult.cached / release()).
         Ref: silver_etl_script.py:526-589."""
-        pred = self.validation.valid_predicate()
+        pred = VALIDATION.valid_predicate()
         tagged = df.withColumn("__valid", pred).persist(StorageLevel.MEMORY_AND_DISK)
         valid = tagged.filter(F.col("__valid")).drop("__valid")
         invalid = (
             tagged.filter(~F.col("__valid"))
             .drop("__valid")
-            .withColumn("reject_reason", self.validation.reject_reason())
+            .withColumn("reject_reason", VALIDATION.reject_reason())
         )
         return valid, invalid, tagged
 
@@ -160,25 +148,34 @@ class SilverPipeline:
         """W1 keep-latest dedup + defaults + single-pass z-score outlier
         nulling. The reference collect()s per-column stats in a loop
         (silver_etl_script.py:668-693); we compute every column's mean/std
-        in ONE agg and null out (not drop) outliers."""
-        d = keep_latest(df, ["spider_name", "source_id"], "ingested_at_utc", tiebreakers=["universal_id"]) \
-            if "universal_id" in df.columns else keep_latest(df, ["spider_name", "source_id"], "ingested_at_utc")
-        d = d.na.fill({k: v for k, v in self.validation.defaults.items() if isinstance(v, (int, float))})
-        d = d.na.fill({k: v for k, v in self.validation.defaults.items() if isinstance(v, str)})
+        in ONE agg and null out (not drop) outliers.
+
+        Two crawls of one listing in the same second tie on
+        ``ingested_at_utc``; a hash over every mapped column breaks the
+        tie, so the same row wins whatever the input order or
+        partitioning."""
+        d = keep_latest(
+            df.withColumn("__row_hash", F.xxhash64(*df.columns)),
+            ["spider_name", "source_id"],
+            "ingested_at_utc",
+            tiebreakers=["__row_hash"],
+        ).drop("__row_hash")
+        d = d.na.fill({k: v for k, v in VALIDATION.defaults.items() if isinstance(v, (int, float))})
+        d = d.na.fill({k: v for k, v in VALIDATION.defaults.items() if isinstance(v, str)})
 
         aggs = []
-        for c in self.outlier_cols:
+        for c in OUTLIER_COLS:
             aggs += [
                 F.avg(c).alias(f"__mean_{c}"),
                 F.stddev(c).alias(f"__std_{c}"),
             ]
         stats = d.agg(*aggs)
         out = d.crossJoin(F.broadcast(stats))
-        for c in self.outlier_cols:
+        for c in OUTLIER_COLS:
             z = (F.col(c) - F.col(f"__mean_{c}")) / F.col(f"__std_{c}")
-            keep = F.col(c).isNull() | F.col(f"__std_{c}").isNull() | (F.abs(z) < self.outlier_sigma)
+            keep = F.col(c).isNull() | F.col(f"__std_{c}").isNull() | (F.abs(z) < OUTLIER_SIGMA)
             out = out.withColumn(c, F.when(keep, F.col(c)))
-        return out.drop(*[f"__mean_{c}" for c in self.outlier_cols], *[f"__std_{c}" for c in self.outlier_cols])
+        return out.drop(*[f"__mean_{c}" for c in OUTLIER_COLS], *[f"__std_{c}" for c in OUTLIER_COLS])
 
     # -- stage 6: standardize ---------------------------------------------------
     def standardize(self, df: DataFrame) -> DataFrame:
@@ -224,7 +221,7 @@ class SilverPipeline:
     # -- full run with sinks ---------------------------------------------------
     def run_and_write(
         self,
-        bronze: DataFrame | dict[str, DataFrame],
+        bronze: dict[str, DataFrame],
         scd2_table,
         quarantine_path: str | None = None,
         batch_ts=None,
@@ -243,7 +240,7 @@ class SilverPipeline:
         return result
 
     # -- full run -------------------------------------------------------------
-    def run(self, bronze: DataFrame) -> SilverResult:
+    def run(self, bronze: dict[str, DataFrame]) -> SilverResult:
         mapped = self.map_all(bronze)
         valid, invalid, tagged = self.validate(mapped)
         report, results = self.quality(valid)

@@ -175,25 +175,3 @@ def correlate_streams(
         F.col("l.ts").alias("left_ts"),
         F.col("r.ts").alias("right_ts"),
     )
-
-
-def run_to_memory(stream_df: DataFrame, name: str, spark: SparkSession) -> DataFrame:
-    """Test helper: availableNow trigger -> complete/append to a memory
-    sink, block until done, return the materialized table."""
-    mode = "complete" if stream_df.isStreaming and _has_aggregation(stream_df) else "append"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    try:
-        return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_estate_data_pipeline_spark.io.maintenance import compact, vacuum_snapshots
+from real_estate_data_pipeline_spark.io.maintenance import compact
 from real_estate_data_pipeline_spark.io.scd2 import Scd2Table
 from real_estate_data_pipeline_spark.ops.functions import (
     distinct_double_transform,
@@ -77,37 +77,9 @@ def test_vacuum_snapshots(spark, tmp_path):
         t.merge(df, batch_ts=F.lit(f"2024-01-0{i+1} 12:00:00"))
     versions = [e for e in os.listdir(str(tmp_path / "t")) if e.startswith("v") and e[1:].isdigit()]
     assert len(versions) == 4
-    removed = vacuum_snapshots(str(tmp_path / "t"), keep=2)
-    assert len(removed) == 2
+    assert t.vacuum(keep=2) == ["v1", "v2"]
+    assert t.history() == [3, 4]
     assert t.read().filter("is_current").first()["v"] == 3.0  # current unharmed
-
-
-def test_scd2_legacy_layout_still_reads(spark, tmp_path):
-    """Tables written before the v<N> rename (snapshots at _v<N>, feed
-    at _cdf/_v<N>) must stay fully usable: read(), history(), AND
-    read_changes() all fall back to the legacy dirs (round-9 review
-    findings — the first fix covered the snapshots, the second pass
-    caught the change feed)."""
-    t = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v"], order_col="ts")
-    d1 = spark.createDataFrame([("a", 1.0, "d1")], "k string, v double, ts string")
-    d2 = spark.createDataFrame([("a", 2.0, "d2")], "k string, v double, ts string")
-    t.merge(d1, batch_ts=F.lit("2024-01-01 12:00:00"))
-    t.merge(d2, batch_ts=F.lit("2024-01-02 12:00:00"))
-    base = str(tmp_path / "t")
-    # rewrite the on-disk layout to the pre-rename naming
-    for v in (1, 2):
-        os.rename(os.path.join(base, f"v{v}"), os.path.join(base, f"_v{v}"))
-    os.makedirs(os.path.join(base, "_cdf"), exist_ok=True)
-    for v in (1, 2):
-        os.rename(
-            os.path.join(base, "cdf", f"v{v}"),
-            os.path.join(base, "_cdf", f"_v{v}"),
-        )
-    os.rmdir(os.path.join(base, "cdf"))
-    assert t.history() == [1, 2]
-    assert t.read().count() == 2  # the closed v1 row + the current v2 row
-    feed = t.read_changes(starting_version=1)
-    assert {r["_commit_version"] for r in feed.collect()} == {1, 2}
 
 
 def test_scd2_change_data_feed(spark, tmp_path):

@@ -5,6 +5,8 @@ SCD2 version counts across two runs, Gold feature shapes.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,6 +88,34 @@ def test_enrichment(silver_result):
 def test_counters(silver_result):
     assert silver_result.counters["quarantined"] == 2
     assert silver_result.counters["valid"] >= 6
+
+
+def test_cleanse_same_second_tie_is_deterministic(spark, tmp_path):
+    """Two crawls of one listing in the same second, at different
+    prices: the same row survives keep-latest whatever the input order
+    or partitioning."""
+    crawls = [
+        {"project_oid": "d1", "project_name": "Dự án Z", "geo": "10.7340,106.7215",
+         "sell_price_lower": price, "timestamp": "2024-01-10T08:00:00", "spider_name": "chotot_api",
+         "process_run_id": "run1"}
+        for price in (1_000_000_000.0, 2_000_000_000.0)
+    ]
+    pipeline = SilverPipeline(spark)
+
+    def winner(rows, name, partitions=None):
+        path = tmp_path / f"{name}.jsonl"
+        path.write_text("".join(json.dumps(r) + "\n" for r in rows))
+        mapped = pipeline.map_all({"chotot_api": read_bronze_json(spark, str(path))})
+        if partitions:
+            mapped = mapped.repartition(partitions)
+        out = pipeline.cleanse(mapped).collect()
+        assert len(out) == 1
+        return out[0]["min_selling_price"]
+
+    first = winner(crawls, "forward")
+    assert winner(crawls[::-1], "reversed") == first
+    assert winner(crawls, "repartitioned", partitions=4) == first
+    assert winner(crawls[::-1], "reversed_repartitioned", partitions=4) == first
 
 
 # ---------------------------------------------------------------------------
