@@ -87,7 +87,12 @@ def main() -> None:
             f"host will contend for cores: {stale}",
             file=sys.stderr,
         )
-    spark = get_session("bench")
+    # the post-loop tracker walk reads pass-0 jobs after warm-up and two
+    # timed passes; keep every job and stage so none is evicted first
+    spark = get_session(
+        "bench",
+        extra_conf={"spark.ui.retainedJobs": "10000", "spark.ui.retainedStages": "10000"},
+    )
 
     bench_queries = {n: q for n, q in CATALOG.items() if q.bench}
 
@@ -157,13 +162,12 @@ def main() -> None:
     tasks: dict[str, int] = {}
     for name in bench_queries:
         jids = tracker.getJobIdsForGroup(f"bench:p0:{name}")
+        if not jids or any(tracker.getJobInfo(j) is None for j in jids):
+            raise SystemExit(f"bench: pass-0 jobs of {name} missing from the status tracker")
         nstages = 0
         ntasks = 0
         for j in jids:
-            ji = tracker.getJobInfo(j)
-            if ji is None:
-                continue
-            for s in ji.stageIds:
+            for s in tracker.getJobInfo(j).stageIds:
                 si = tracker.getStageInfo(s)
                 if si is not None and si.numCompletedTasks > 0:
                     nstages += 1

@@ -29,10 +29,13 @@ import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.dedup import keep_latest
+
+# the batch timestamp column the merge's SQL emissions read
+_TS = "__scd2_batch_ts"
 
 
 class Scd2Table:
@@ -49,7 +52,7 @@ class Scd2Table:
         self.key = key
         self.tracked = tracked
         self.order_col = order_col
-        # Snapshot schema memo (r15 opt round): every bare
+        # Snapshot schema memo: every bare
         # spark.read.parquet re-infers the schema in a 1-task footer
         # job; all of a table's snapshots share one schema, so the
         # first write/read pins it and later reads pass it explicitly
@@ -192,36 +195,18 @@ class Scd2Table:
         return self.spark.read.parquet(*dirs)
 
     # -- merge --------------------------------------------------------------
-    def _changed_cond(self) -> Column:
-        """NOT (all tracked attributes null-safe-equal). With no tracked
-        attributes nothing can ever differ, so the condition is
-        constant-false (merge degenerates to insert-new-keys-only)."""
-        if not self.tracked:
-            return F.lit(False)
-        cond = None
-        for c in self.tracked:
-            eq = F.col(f"cur.{c}").eqNullSafe(F.col(f"new.{c}"))
-            cond = eq if cond is None else (cond & eq)
-        return ~cond
-
     def merge(self, batch: DataFrame, batch_ts=None) -> dict[str, int]:
         """Apply one batch; returns counters (closed/inserted/unchanged)."""
         batch_ts = batch_ts if batch_ts is not None else F.current_timestamp()
-        incoming = keep_latest(batch, [self.key], self.order_col).select(
-            *[F.col(c) for c in batch.columns]
-        )
-
-        data_cols = list(incoming.columns)
+        # keep_latest returns the batch's columns in their order
+        incoming = keep_latest(batch, [self.key], self.order_col)
 
         existing = self.read()
         if existing is None:
-            # r15 opt round: the inserted counter rides the snapshot
-            # write as an Observation instead of a third action that
-            # replayed the keep-latest window from scratch, and the
-            # (independent) snapshot + CDF writes run concurrently so
-            # the second job back-fills the first's task tail
-            # (guide §2.6). One driver-side round fewer per first merge;
-            # counters identical.
+            # the inserted counter rides the snapshot write as an
+            # Observation instead of a separate action, and the
+            # independent snapshot + CDF writes run concurrently so the
+            # second job back-fills the first's task tail
             obs = Observation()
             first = (
                 incoming.withColumn("is_current", F.lit(True))
@@ -229,10 +214,8 @@ class Scd2Table:
                 .withColumn("valid_to", F.lit(None).cast("timestamp"))
                 .observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            cdf1 = (
-                incoming.select(data_cols)
-                .withColumn("_change_type", F.lit("insert"))
-                .withColumn("_commit_version", F.lit(1))
+            cdf1 = incoming.withColumn("_change_type", F.lit("insert")).withColumn(
+                "_commit_version", F.lit(1)
             )
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fs = pool.submit(self._write_snapshot, first)
@@ -245,129 +228,92 @@ class Scd2Table:
         hist = existing.filter(~F.col("is_current"))
         new = incoming.alias("new")
 
-        # one full-outer join, persisted: the counter aggregate and the
-        # snapshot write both reuse it instead of recomputing the
-        # join lineage once per action (4x before)
+        # one full-outer join, persisted: the snapshot write and the CDF
+        # write both read it instead of recomputing the join lineage
         joined = cur.join(
             new, F.col(f"cur.{self.key}") == F.col(f"new.{self.key}"), "full_outer"
         ).persist()
         try:
-            changed = self._changed_cond()
-            is_matched = (
-                F.col(f"cur.{self.key}").isNotNull() & F.col(f"new.{self.key}").isNotNull()
+            # Every joined row emits its 0-2 snapshot rows and 0-2 change
+            # rows through a conditional array + explode, so each write
+            # scans the cached join once. The emissions are SQL text with
+            # quoted identifiers: one JVM call per expression, where the
+            # Column API would cost several calls per column per struct.
+            k = _q(self.key)
+            matched = f"(cur.{k} IS NOT NULL AND new.{k} IS NOT NULL)"
+            # NOT (all tracked attributes null-safe-equal); with none
+            # tracked nothing can differ and the merge only inserts
+            changed = (
+                "NOT (" + " AND ".join(f"cur.{_q(c)} <=> new.{_q(c)}" for c in self.tracked) + ")"
+                if self.tracked
+                else "false"
             )
-            # r15 opt round, part 2: the snapshot's former 4 union
-            # branches over the cached join (closed / unchanged /
-            # only_cur / inserts — each a separate filtered scan of the
-            # cache, each its own AQE stage-job) collapse into ONE pass:
-            # every joined row emits its 0-2 snapshot rows directly
-            # through a conditional array + explode. Branch conditions
-            # and per-branch column expressions are verbatim the old
-            # filters/selects, so the emitted multiset of rows is
-            # identical; only the physical row order interleaves (all
-            # consumers order explicitly). The cached merge join is now
-            # scanned once by the snapshot write instead of four times —
-            # locally fewer stage-jobs, at scale 4x fewer reads of a
-            # join that may no longer fit in memory (guide §1.2 remove
-            # passes, §2.4 remove duplicated subtrees).
-            cols = [f.name for f in existing.schema.fields]
-            ts = batch_ts.cast("timestamp")
+            src = joined.withColumn(_TS, batch_ts.cast("timestamp"))
+            cols = existing.columns
+            closed = {"is_current": "false", "valid_to": _TS}
+            insert = {
+                "is_current": "true",
+                "valid_from": _TS,
+                "valid_to": "CAST(NULL AS TIMESTAMP)",
+            }
 
-            def _snap_struct(side: str, tag: str, ov: dict[str, Column]) -> Column:
-                return F.struct(
-                    *[ov.get(c, F.col(f"{side}.{c}")).alias(c) for c in cols],
-                    F.lit(tag).alias("__tag"),
-                )
+            def snap(side: str, tag: str, over: dict[str, str] | None = None) -> str:
+                return _struct(side, cols, over or {}, f"'{tag}' AS __tag")
 
-            closed_s = _snap_struct(
-                "cur", "closed", {"is_current": F.lit(False), "valid_to": ts}
-            )
-            unchanged_s = _snap_struct("cur", "unchanged", {})
-            only_cur_s = _snap_struct("cur", "only_cur", {})
-            insert_s = _snap_struct(
-                "new",
-                "insert",
-                {
-                    "is_current": F.lit(True),
-                    "valid_from": ts,
-                    "valid_to": F.lit(None).cast("timestamp"),
-                },
-            )
             # exhaustive over the full-outer join (>=1 side non-null):
-            # matched+changed -> close old version AND insert the new
-            # one (insert_cond holds there); matched+unchanged -> keep;
-            # no incoming match -> keep as-is; else brand-new -> insert.
-            emit = (
-                F.when(is_matched & changed, F.array(closed_s, insert_s))
-                .when(is_matched & ~changed, F.array(unchanged_s))
-                .when(F.col(f"new.{self.key}").isNull(), F.array(only_cur_s))
-                .otherwise(F.array(insert_s))
-            )
-            snap_rows = joined.select(F.explode(emit).alias("_r")).select("_r.*")
+            # matched+changed -> close the old version AND insert the new
+            # one; matched+unchanged -> keep; no incoming match -> keep
+            # as-is; else brand-new -> insert
+            snap_rows = src.selectExpr(
+                f"""explode(CASE
+                  WHEN {matched} AND {changed}
+                    THEN array({snap("cur", "closed", closed)}, {snap("new", "insert", insert)})
+                  WHEN {matched} AND NOT {changed} THEN array({snap("cur", "unchanged")})
+                  WHEN new.{k} IS NULL THEN array({snap("cur", "only_cur")})
+                  ELSE array({snap("new", "insert", insert)}) END) AS _r"""
+            ).select("_r.*")
 
-            # r15 opt round: the three counters ride the snapshot write
-            # as an Observation over the per-branch tags (closed /
-            # insert / unchanged are tags of the emitted rows, so they
-            # count exactly what the old standalone aggregate counted)
-            # instead of a separate collect action — one fewer job per
-            # merge, and the cached join materializes inside the
-            # snapshot write. The snapshot and CDF writes are
+            # the three counters ride the snapshot write as an
+            # Observation over the emitted rows' tags instead of a
+            # separate action; the snapshot and CDF writes are
             # independent (different dirs, version precomputed), so they
-            # run concurrently and the second job's tasks back-fill the
-            # first's tail (guide §2.6). Counters and written rows are
-            # byte-identical to the sequential three-action form.
+            # run concurrently
             obs = Observation()
             result = (
-                hist.select(*cols, F.lit("hist").alias("__tag"))
+                hist.withColumn("__tag", F.lit("hist"))
                 .unionByName(snap_rows)
                 .observe(
                     obs,
-                    F.coalesce(
-                        F.sum((F.col("__tag") == "closed").cast("long")), F.lit(0)
-                    ).alias("closed"),
-                    F.coalesce(
-                        F.sum((F.col("__tag") == "insert").cast("long")), F.lit(0)
-                    ).alias("inserted"),
-                    F.coalesce(
-                        F.sum((F.col("__tag") == "unchanged").cast("long")), F.lit(0)
-                    ).alias("unchanged"),
+                    F.expr("count_if(__tag = 'closed') AS closed"),
+                    F.expr("count_if(__tag = 'insert') AS inserted"),
+                    F.expr("count_if(__tag = 'unchanged') AS unchanged"),
                 )
                 .drop("__tag")
             )
-            # CDF rows off the SAME cached join, likewise one explode
-            # pass instead of three filtered branches: brand-new keys ->
-            # insert; changed keys -> old current row as
-            # update_preimage + new row as update_postimage; unchanged
-            # keys emit nothing (Delta CDF semantics; the when-chain
-            # without otherwise yields NULL there and explode drops it)
+            # Delta CDF semantics: brand-new keys -> insert; changed keys
+            # -> old current row as update_preimage + new row as
+            # update_postimage; every other row emits nothing (the CASE
+            # without ELSE yields NULL, and explode drops it)
             version = (self._current_version() or 0) + 1
 
-            def _cdf_struct(side: str, kind: str) -> Column:
-                return F.struct(
-                    *[F.col(f"{side}.{c}").alias(c) for c in data_cols],
-                    F.lit(kind).alias("_change_type"),
-                )
+            def change(side: str, kind: str) -> str:
+                return _struct(side, incoming.columns, {}, f"'{kind}' AS _change_type")
 
-            brand_new_cond = F.col(f"new.{self.key}").isNotNull() & F.col(
-                f"cur.{self.key}"
-            ).isNull()
-            cdf_emit = F.when(
-                brand_new_cond, F.array(_cdf_struct("new", "insert"))
-            ).when(
-                is_matched & changed,
-                F.array(
-                    _cdf_struct("cur", "update_preimage"),
-                    _cdf_struct("new", "update_postimage"),
-                ),
+            cdf = (
+                src.selectExpr(
+                    f"""explode(CASE
+                      WHEN new.{k} IS NOT NULL AND cur.{k} IS NULL
+                        THEN array({change("new", "insert")})
+                      WHEN {matched} AND {changed}
+                        THEN array({change("cur", "update_preimage")},
+                                   {change("new", "update_postimage")}) END) AS _r"""
+                )
+                .select("_r.*")
+                .withColumn("_commit_version", F.lit(version))
             )
-            cdf = joined.select(F.explode(cdf_emit).alias("_r")).select("_r.*")
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fs = pool.submit(self._write_snapshot, result)
-                fc = pool.submit(
-                    self._write_changes,
-                    cdf.withColumn("_commit_version", F.lit(version)),
-                    version,
-                )
+                fc = pool.submit(self._write_changes, cdf, version)
                 fs.result()
                 fc.result()
             stats = obs.get
@@ -378,3 +324,15 @@ class Scd2Table:
             "inserted": int(stats["inserted"]),
             "unchanged": int(stats["unchanged"]),
         }
+
+
+def _q(name: str) -> str:
+    """Backtick-quote one identifier for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _struct(side: str, cols: list[str], over: dict[str, str], tag: str) -> str:
+    """SQL ``struct(...)`` of ``cols`` read from the ``side`` alias, each
+    replaced by its ``over`` expression where one is given, then ``tag``."""
+    fields = [f"{over.get(c, f'{side}.{_q(c)}')} AS {_q(c)}" for c in cols]
+    return f"struct({', '.join(fields)}, {tag})"

@@ -16,15 +16,18 @@ What the reference does in ~1100 lines of script, and where we differ:
 | write | Delta MERGE SCD2 :916-966 | Scd2Table (same semantics) |
 | quarantine/meta | Delta appends :997-1055 | parquet appends |
 
-Action count: the reference fires ~25 count() jobs; this pipeline runs
-the lineage twice (valid/invalid split is cached) plus one stats agg —
-at 100 TB that is the dominant cost difference.
+Spark jobs per Bronze day, traced on perfbench's ``pipeline_daily``
+(three sources, a 1.5k-row day into a seeded SCD2 table; each count is
+that step's own jobs): reading the sources 3, ``run`` 4, the quality
+checks 3, the SCD2 merge about 10, the Gold rebuild 6. The reference
+fires ~25 count() jobs for its counters alone.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
@@ -72,12 +75,12 @@ class SilverPipeline:
             if src in cols:
                 exprs[dst] = F.col(src)
         for dst, fn in spec.derived.items():
+            e = fn(df)
             try:
-                e = fn(df)
                 df.select(e).schema  # force analysis: Columns are lazy, a
                 # missing input (schema drift / empty file) surfaces here
                 exprs[dst] = e
-            except Exception:  # source drifted: derived input missing
+            except AnalysisException:  # source drifted: derived input missing
                 exprs[dst] = F.lit(None)
         selected = [e.alias(d) for d, e in exprs.items()]
         for stamp in ("process_run_id",):

@@ -43,6 +43,12 @@ def get_session(
         # lets custom Python DataSources (io/pysource.py) receive
         # pushFilters() — off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # PySpark otherwise captures the Python call site of every
+        # functions/Column call (about 5 extra JVM round trips each) only
+        # to show file:line in a DataFrame error's query context;
+        # docs/production-config.md § Session has the cost and how to
+        # turn it back on
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,20 +13,6 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-def pytest_collection_modifyitems(config, items):
-    """Record which oracle-parity query names were actually collected,
-    so the parity thread pool (tests/test_oracle_parity.py) only
-    precomputes the selected subset: `-k one_query` runs one Spark
-    query, a full run batches the whole catalog."""
-    collected = set()
-    for it in items:
-        if getattr(it, "originalname", None) == "test_oracle_parity":
-            spec = getattr(it, "callspec", None)
-            if spec is not None and "name" in spec.params:
-                collected.add(spec.params["name"])
-    config._parity_collected = collected
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("tests", shuffle_partitions=8)

@@ -405,6 +405,137 @@ def test_scd2_merge_four_branch_emission(spark, tmp_path):
     }
 
 
+def test_scd2_merge_null_safe_two_tracked_quoted_column(spark, tmp_path):
+    """Full snapshot and change-feed rows over three merges with two
+    tracked columns, NULLs on either side of the null-safe comparison
+    and a data column whose name needs quoting (``unit price``):
+    NULL = NULL is unchanged, NULL -> value and value -> NULL are
+    changes, a change in an untracked column is not, and closed rows
+    of earlier merges carry into later snapshots untouched."""
+    schema = "k string, v double, w string, `unit price` double, ts string"
+    t = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v", "w"], order_col="ts")
+    d1 = spark.createDataFrame(
+        [
+            ("nn", None, "x", 1.0, "d1"),  # v NULL on both sides: unchanged
+            ("nv", None, "y", 2.0, "d1"),  # v NULL -> value: changed
+            ("vn", 8.0, "z", 7.0, "d1"),  # v value -> NULL: changed
+            ("w2", 1.0, "a", 3.0, "d1"),  # second tracked column changes
+            ("px", 1.0, "p", 4.0, "d1"),  # only the untracked column changes
+            ("gone", 5.0, "g", 5.0, "d1"),  # absent from the second batch
+        ],
+        schema,
+    )
+    d2 = spark.createDataFrame(
+        [
+            ("nn", None, "x", 1.0, "d2"),
+            ("nv", 7.0, "y", 2.5, "d2"),
+            ("vn", None, "z", 7.0, "d2"),
+            ("w2", 1.0, "b", 3.0, "d2"),
+            ("px", 1.0, "p", 40.0, "d2"),
+            ("fresh", None, None, 6.0, "d2"),
+            ("fresh", 0.0, "old", 0.0, "d1"),  # older duplicate: dropped
+        ],
+        schema,
+    )
+    d3 = spark.createDataFrame([("w2", 1.0, "c", 3.0, "d3")], schema)
+    ts = {n: f"2024-01-0{n} 12:00:00" for n in (1, 2, 3)}
+    counters = [t.merge(d, batch_ts=F.lit(ts[i + 1])) for i, d in enumerate((d1, d2, d3))]
+    assert counters == [
+        {"closed": 0, "inserted": 6, "unchanged": 0},
+        {"closed": 3, "inserted": 4, "unchanged": 2},
+        {"closed": 1, "inserted": 1, "unchanged": 0},
+    ]
+
+    def rows(df, cols):
+        return sorted(
+            (tuple(r) for r in df.select(*[F.col(c).cast("string") for c in cols]).collect()),
+            key=repr,
+        )
+
+    data = ["k", "v", "w", "unit price", "ts"]
+    snap_cols = data + ["is_current", "valid_from", "valid_to"]
+    assert t.read().columns == snap_cols
+
+    def cur(r, since):
+        return (*r, "true", ts[since], None)
+
+    def closed(r, since, until):
+        return (*r, "false", ts[since], ts[until])
+
+    v2 = [
+        cur(("nn", None, "x", "1.0", "d1"), 1),
+        cur(("px", "1.0", "p", "4.0", "d1"), 1),
+        cur(("gone", "5.0", "g", "5.0", "d1"), 1),
+        closed(("nv", None, "y", "2.0", "d1"), 1, 2),
+        cur(("nv", "7.0", "y", "2.5", "d2"), 2),
+        closed(("vn", "8.0", "z", "7.0", "d1"), 1, 2),
+        cur(("vn", None, "z", "7.0", "d2"), 2),
+        closed(("w2", "1.0", "a", "3.0", "d1"), 1, 2),
+        cur(("w2", "1.0", "b", "3.0", "d2"), 2),
+        cur(("fresh", None, None, "6.0", "d2"), 2),
+    ]
+    assert rows(t.read(version=2), snap_cols) == sorted(v2, key=repr)
+    v3 = [r for r in v2 if r[:3] != ("w2", "1.0", "b")] + [
+        closed(("w2", "1.0", "b", "3.0", "d2"), 2, 3),
+        cur(("w2", "1.0", "c", "3.0", "d3"), 3),
+    ]
+    assert rows(t.read(), snap_cols) == sorted(v3, key=repr)
+
+    cdf_cols = data + ["_change_type", "_commit_version"]
+    assert rows(t.read_changes(2, 2), cdf_cols) == sorted(
+        [
+            ("fresh", None, None, "6.0", "d2", "insert", "2"),
+            ("nv", None, "y", "2.0", "d1", "update_preimage", "2"),
+            ("nv", "7.0", "y", "2.5", "d2", "update_postimage", "2"),
+            ("vn", "8.0", "z", "7.0", "d1", "update_preimage", "2"),
+            ("vn", None, "z", "7.0", "d2", "update_postimage", "2"),
+            ("w2", "1.0", "a", "3.0", "d1", "update_preimage", "2"),
+            ("w2", "1.0", "b", "3.0", "d2", "update_postimage", "2"),
+        ],
+        key=repr,
+    )
+    assert rows(t.read_changes(3, 3), cdf_cols) == [
+        ("w2", "1.0", "b", "3.0", "d2", "update_preimage", "3"),
+        ("w2", "1.0", "c", "3.0", "d3", "update_postimage", "3"),
+    ]
+
+
+def test_scd2_merge_jvm_round_trips_flat_in_columns(spark, tmp_path, monkeypatch):
+    """Driver-side plan building of a steady-state merge (the second
+    one, which joins and rewrites the snapshot) must not cost a JVM
+    round trip per column per expression: each added data column may
+    cost at most 10 py4j calls, counted at 8 and at 64 data columns."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    def steady_merge_calls(n: int) -> int:
+        cols = [f"c{i}" for i in range(n)]
+        schema = "k string, ts string, " + ", ".join(f"{c} double" for c in cols)
+        t = Scd2Table(spark, str(tmp_path / f"w{n}"), key="k", tracked=["c0"], order_col="ts")
+
+        def batch(day: str, v: float):
+            return spark.createDataFrame([("a", day, *[v] * n), ("b", day, *[1.0] * n)], schema)
+
+        t.merge(batch("d1", 1.0), batch_ts=F.lit("2024-01-01 12:00:00"))
+        d2 = batch("d2", 2.0)
+        calls = 0
+
+        def counting(self, command, *args, **kwargs):
+            nonlocal calls
+            calls += 1
+            return send(self, command, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counting)
+            counters = t.merge(d2, batch_ts=F.lit("2024-01-02 12:00:00"))
+        assert counters == {"closed": 1, "inserted": 1, "unchanged": 1}
+        return calls
+
+    small, large = steady_merge_calls(8), steady_merge_calls(64)
+    assert (large - small) / (64 - 8) <= 10, (small, large)
+
+
 def test_scd2_read_as_of(spark, tmp_path):
     """timestampAsOf over the validity columns: before the first merge
     -> empty; between merges -> exactly the day-1 state; after the

@@ -120,7 +120,7 @@ ROWS_ONLY = [n for n, q in CATALOG.items() if q.oracle is None]
 # Each test still owns exactly one query: it blocks on ITS future, so a
 # worker exception surfaces in (and only in) that query's test, and the
 # DuckDB + comparison halves stay in the test body. Only names COLLECTED
-# for this run are submitted (see conftest.pytest_collection_modifyitems),
+# for this run (after -k/-m deselection) are submitted,
 # so `-k one_query` computes one query, not the catalog.
 #
 # Thread-safety audit (r16): query fns build plans via py4j (thread-safe,
@@ -137,8 +137,13 @@ _PARITY_POOL_SIZE = int(os.environ.get("SPARK_GRAFT_PARITY_THREADS", "16"))
 def parity_futures(spark, sf_oracle, ddb, request):
     from concurrent.futures import ThreadPoolExecutor
 
-    collected = getattr(request.config, "_parity_collected", None)
-    names = [n for n in ORACLE_QUERIES if collected is None or n in collected]
+    # session.items is the post-deselection selection (-k / -m applied)
+    selected = {
+        it.callspec.params["name"]
+        for it in request.session.items
+        if getattr(it, "originalname", None) == "test_oracle_parity"
+    }
+    names = [n for n in ORACLE_QUERIES if n in selected]
     pool = ThreadPoolExecutor(max_workers=_PARITY_POOL_SIZE)
 
     # The DuckDB half rides the same future: the 807 oracles measured

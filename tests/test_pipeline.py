@@ -5,6 +5,7 @@ SCD2 version counts across two runs, Gold feature shapes.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 
 import pytest
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 from real_estate_data_pipeline_spark.io.readers import read_bronze_json
 from real_estate_data_pipeline_spark.io.scd2 import Scd2Table
 from real_estate_data_pipeline_spark.pipeline import GoldPipeline, SilverPipeline
-from real_estate_data_pipeline_spark.schema.sources import SILVER_SCHEMA
+from real_estate_data_pipeline_spark.schema.sources import SILVER_SCHEMA, SOURCE_SPECS
 
 from fixtures import write_bronze
 
@@ -116,6 +117,28 @@ def test_cleanse_same_second_tie_is_deterministic(spark, tmp_path):
     assert winner(crawls[::-1], "reversed") == first
     assert winner(crawls, "repartitioned", partitions=4) == first
     assert winner(crawls[::-1], "reversed_repartitioned", partitions=4) == first
+
+
+def test_map_source_missing_input_is_null_but_bugs_raise(spark, tmp_path):
+    """A chotot_api file without the ``geo`` field maps latitude and
+    longitude to NULL (schema drift); a derived function that raises
+    is a bug and propagates instead of becoming a NULL column."""
+    path = tmp_path / "nogeo.jsonl"
+    path.write_text(json.dumps({
+        "project_oid": "g1", "project_name": "Dự án G", "timestamp": "2024-01-10T08:00:00",
+        "spider_name": "chotot_api", "process_run_id": "run1",
+    }) + "\n")
+    df = read_bronze_json(spark, str(path))
+    spec = SOURCE_SPECS["chotot_api"]
+    pipeline = SilverPipeline(spark)
+    row = pipeline.map_source(df, spec).first()
+    assert (row["source_id"], row["latitude"], row["longitude"]) == ("g1", None, None)
+
+    def broken(df):
+        raise TypeError("bug in a derived function")
+
+    with pytest.raises(TypeError, match="bug in a derived function"):
+        pipeline.map_source(df, dataclasses.replace(spec, derived={"latitude": broken}))
 
 
 # ---------------------------------------------------------------------------
