@@ -2,9 +2,10 @@
 
 Reference behaviors re-expressed:
 - S1 JSONL multi-path scan with *inferred* schema
-  (silver_etl_script.py:122-152) -> explicit per-source schema +
-  PERMISSIVE mode with a corrupt-record column (deterministic under
-  schema drift, SURVEY §7.4.5).
+  (silver_etl_script.py:122-152) -> Bronze stays raw lines; each
+  source's declared ``SourceSpec.bronze`` schema parses them in Silver
+  (``from_json``), so reading starts no job and schema drift nulls the
+  one drifted field of the one drifted row (SURVEY §7.4.5).
 - S2 manual path-glob partition pruning (silver_etl_script.py:122-134)
   -> Hive-style partition columns so Catalyst prunes at plan time.
 """
@@ -18,20 +19,11 @@ from pyspark.sql import types as T
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_bronze_json(
-    spark: SparkSession,
-    paths: list[str] | str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """S1 — Bronze JSONL scan. With an explicit schema we add a corrupt-
-    record column so bad lines are quarantine-able rather than silently
-    dropped; without one we fall back to inference (reference parity)."""
-    reader = spark.read.option("mode", "PERMISSIVE")
-    if schema is not None:
-        if CORRUPT_COL not in [f.name for f in schema.fields]:
-            schema = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
-        reader = reader.schema(schema).option("columnNameOfCorruptRecord", CORRUPT_COL)
-    return reader.json(paths)
+def read_bronze_json(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """S1 — Bronze JSONL as raw lines (one ``value`` string column).
+    Lazy: no schema inference, no job; ``SilverPipeline.map_source``
+    parses the lines with the source's declared schema."""
+    return spark.read.text(paths)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -43,7 +35,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def read_any(
     spark: SparkSession,
-    path: str,
+    path: list[str] | str,
     fmt: str = "parquet",
     schema: T.StructType | None = None,
     **options,

@@ -6,10 +6,10 @@ What the reference does in ~1100 lines of script, and where we differ:
 
 | stage | reference | here |
 |---|---|---|
-| ingest | inferred-schema JSON scan + count() | explicit schema, no count |
+| ingest | inferred-schema JSON scan + count() | raw lines, declared per-source schema, no job |
 | map | per-source if-ladders :157-521 | SourceSpec-driven generic op |
 | validate | predicate split :526-589 | same, + reject reason column |
-| DQ | one job per check | single-pass QualityChecker |
+| DQ | one job per check | one aggregate: every check + the counters |
 | cleanse | W1 dedup + fillna + per-column collect() outlier loop :631-696 | W1 dedup + fillna + ONE agg for all column stats |
 | standardize | phone/email/html/city :701-749 | same column fns |
 | enrich | sha2 id, midpoints, scores, flags :754-911 | same column fns |
@@ -18,17 +18,16 @@ What the reference does in ~1100 lines of script, and where we differ:
 
 Spark jobs per Bronze day, traced on perfbench's ``pipeline_daily``
 (three sources, a 1.5k-row day into a seeded SCD2 table; each count is
-that step's own jobs): reading the sources 3, ``run`` 4, the quality
-checks 3, the SCD2 merge about 10, the Gold rebuild 6. The reference
-fires ~25 count() jobs for its counters alone.
+that step's own jobs): reading the sources 0, ``run`` 3 (quality checks
+and counters included), the SCD2 merge about 10, the Gold rebuild 6.
+The reference fires ~25 count() jobs for its counters alone.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
@@ -65,40 +64,30 @@ class SilverPipeline:
 
     # -- stage 2: schema mapping -------------------------------------------
     def map_source(self, df: DataFrame, spec: SourceSpec) -> DataFrame:
-        """One explicit SELECT building every canonical column (renames +
-        nested derivations), then conform to SILVER_SCHEMA — no
-        withColumn chains, no rename collisions.
+        """Parse the raw Bronze lines with the source's declared schema,
+        then one explicit SELECT building every canonical column (renames
+        + nested derivations), then conform to SILVER_SCHEMA — no
+        withColumn chains, no rename collisions. Blank lines parse to
+        NULL and are dropped; a malformed line parses to all-NULL fields
+        and is quarantined by validation.
         Ref: apply_schema_mapping silver_etl_script.py:157-521."""
-        cols = set(df.columns)
-        exprs: dict[str, Column] = {}
-        for src, dst in spec.mapping.items():
-            if src in cols:
-                exprs[dst] = F.col(src)
-        for dst, fn in spec.derived.items():
-            e = fn(df)
-            try:
-                df.select(e).schema  # force analysis: Columns are lazy, a
-                # missing input (schema drift / empty file) surfaces here
-                exprs[dst] = e
-            except AnalysisException:  # source drifted: derived input missing
-                exprs[dst] = F.lit(None)
-        selected = [e.alias(d) for d, e in exprs.items()]
-        for stamp in ("process_run_id",):
-            if stamp in cols:
-                selected.append(F.col(stamp))
-        if "timestamp" in cols:
+        rec = F.from_json(F.col("value"), spec.bronze).alias("rec")
+        df = df.select(rec).where(F.col("rec").isNotNull()).select("rec.*")
+        exprs = {dst: F.col(src) for src, dst in spec.mapping.items()}
+        exprs.update({dst: fn(df) for dst, fn in spec.derived.items()})
+        out = df.select(
+            *[e.alias(d) for d, e in exprs.items()],
+            F.col("process_run_id"),
             # Bronze stamp: yyyy-MM-dd'T'HH:mm:ss. Ref: silver_etl_script.py:511-516
-            selected.append(
-                F.try_to_timestamp(F.col("timestamp"), F.lit("yyyy-MM-dd'T'HH:mm:ss")).alias(
-                    "ingested_at_utc"
-                )
-            )
-        out = df.select(*selected).withColumn("spider_name", F.lit(spec.name))
+            F.try_to_timestamp(F.col("timestamp"), F.lit("yyyy-MM-dd'T'HH:mm:ss")).alias(
+                "ingested_at_utc"
+            ),
+        ).withColumn("spider_name", F.lit(spec.name))
         return conform(out, SILVER_SCHEMA)
 
     def map_all(self, bronze: dict[str, DataFrame]) -> DataFrame:
         """Per-source map -> U1 unionByName fold (silver_etl_script.py:
-        167,504-508). Input is a dict of per-source DataFrames, each read
+        167,504-508). Input is a dict of per-source DataFrames, each parsed
         with its own schema — a single inferred-schema scan of mixed
         sources (the reference's approach) makes conflicting nested types
         collapse to strings (SURVEY §7.4.5). Every branch conforms to the
@@ -131,9 +120,10 @@ class SilverPipeline:
         )
         return valid, invalid, tagged
 
-    # -- stage 4: quality ----------------------------------------------------
-    def quality(self, df: DataFrame) -> tuple[str, list]:
-        """§2.14 checks in one aggregate pass."""
+    # -- stage 4: quality + counters ----------------------------------------
+    def quality(self, tagged: DataFrame) -> tuple[str, dict]:
+        """§2.14 checks over the valid rows and the valid/quarantined
+        counters, from ONE aggregate grouped by the validation flag."""
         qc = (
             QualityChecker()
             .null_check("source_id", max_null_pct=0.0)
@@ -143,8 +133,18 @@ class SilverPipeline:
             .range_check("longitude", -180, 180)
             .completeness_check(["source_id", "project_name", "spider_name"], 95.0)
         )
-        results = qc.run(df)
-        return QualityChecker.report(results), results
+        groups = {
+            r["__valid"]: r.asDict()
+            for r in tagged.groupBy("__valid").agg(*qc.aggregate_exprs()).collect()
+        }
+        valid, invalid = (groups.get(flag, {"__total": 0}) for flag in (True, False))
+        results = qc.results(valid)
+        counters = {
+            "valid": valid["__total"],
+            "quarantined": invalid["__total"],
+            "quality_failed": sum(1 for r in results if not r.passed),
+        }
+        return QualityChecker.report(results), counters
 
     # -- stage 5: cleanse ------------------------------------------------------
     def cleanse(self, df: DataFrame) -> DataFrame:
@@ -246,15 +246,8 @@ class SilverPipeline:
     def run(self, bronze: dict[str, DataFrame]) -> SilverResult:
         mapped = self.map_all(bronze)
         valid, invalid, tagged = self.validate(mapped)
-        report, results = self.quality(valid)
-        cleansed = self.cleanse(valid)
-        standardized = self.standardize(cleansed)
-        enriched = self.enrich(standardized)
-        counters = {
-            "valid": valid.count(),
-            "quarantined": invalid.count(),
-            "quality_failed": sum(1 for r in results if not r.passed),
-        }
+        report, counters = self.quality(tagged)
+        enriched = self.enrich(self.standardize(self.cleanse(valid)))
         return SilverResult(
             silver=enriched,
             quarantine=invalid,

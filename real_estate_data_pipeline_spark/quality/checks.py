@@ -134,9 +134,17 @@ class QualityChecker:
     def aggregate_exprs(self) -> list[Column]:
         return [F.count(F.lit(1)).alias("__total"), *self._aggs]
 
-    def run(self, df: DataFrame) -> list[CheckResult]:
-        row = df.agg(*self.aggregate_exprs()).collect()[0].asDict()
+    def results(self, row: dict) -> list[CheckResult]:
+        """Check results from one row of ``aggregate_exprs()`` values. A
+        row of ``{"__total": 0}`` (no rows aggregated) is enough: every
+        finalizer reads ``__total`` first."""
         return [fin(row) for fin in self._finalizers]
+
+    def run(self, df: DataFrame) -> list[CheckResult]:
+        """Aggregate ``df`` in a job of its own. The Silver pipeline folds
+        the checks into its shared aggregate and calls ``results``; this
+        entry stays for the unit tests and perfbench's span hook."""
+        return self.results(df.agg(*self.aggregate_exprs()).collect()[0].asDict())
 
     @staticmethod
     def referential_integrity(df: DataFrame, col: str, ref_df: DataFrame, ref_col: str) -> int:

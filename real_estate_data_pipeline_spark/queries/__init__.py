@@ -20,13 +20,9 @@ compare passes bit-for-bit):
   DuckDB -> registered without an oracle (driver does a rows-only check).
 """
 
-# Split into per-family submodules in round 13 (mechanical move of the
-# register-blocks; VERDICT r12 item 2).  Import order below IS the original
-# single-file order: register() appends to CATALOG in order, _window runs
-# last and applies the driver-window reorder + invariants.  The hoist loop
-# at the bottom reconstructs the original flat module namespace so every
-# external importer (`from ...queries import CATALOG / t / flagship / _AO_W`)
-# keeps working unchanged.
+# One submodule per query family. Import order below IS the catalog order:
+# register() appends to CATALOG in order, _window runs last and applies
+# the driver-window reorder + invariants.
 
 from . import _registry as _registry
 from . import q01_aggregations as q01_aggregations
@@ -143,155 +139,9 @@ from . import q111_r15_final_mix as q111_r15_final_mix
 from . import q112_r15_count_laws as q112_r15_count_laws
 from . import _window as _window
 
-# Submodules in original single-file order.  Attribute access on the
-# package delegates LIVE to the owning submodule (PEP 562 __getattr__
-# below, last module wins, matching the old hoist's last-write-wins) —
-# no import-time by-value copies, so submodule globals rebound at
-# runtime (e.g. _registry._FAN_OUT_WARNED) never diverge from what the
-# package attribute reports (ADVICE r13).
-_MODULES = (
-    _registry,
-    q01_aggregations,
-    q02_filters_projections,
-    q03_joins,
-    q04_dedup_topk_union,
-    q05_tpch_headliners,
-    q06_scalar_functions,
-    q07_nested,
-    q08_event_windows,
-    q09_llm_dedup_text_sim,
-    q10_coverage_misc,
-    q11_window_analytics,
-    q12_asof_range,
-    q13_doc_cleanse,
-    q14_tpch_deep,
-    q15_curation_r3,
-    q16_curation_r4,
-    q17_flagship,
-    q18_r7_timeseries,
-    q19_r7_graph,
-    q20_r7_language_models,
-    q21_r7_retrieval,
-    q22_r7_lakehouse,
-    q23_r7_bi,
-    q24_r7_distribution_diag,
-    q25_r7_inference,
-    q26_r8_mixed,
-    q27_r9_retrieval,
-    q28_r9_sketch_vocab,
-    q29_r9_rank_stats,
-    q30_r9_robust_ml,
-    q31_r9_wave2_rank_embed,
-    q32_r10_effect_sizes,
-    q33_r10_inequality_resampling,
-    q34_r10_graph_scoring,
-    q35_r10_quantreg_forecast,
-    q36_r10_hdbscan_knn,
-    q37_r10_trend_capture,
-    q38_r10_wilcoxon_mi,
-    q39_r10_cms_kappa,
-    q40_r10_agreement_pr,
-    q41_r10_bfs_pareto,
-    q42_r10_effectsize_inequality,
-    q43_r11_experimentation,
-    q44_r11_timeseries_diag,
-    q45_r11_sketch_composition,
-    q46_r11_curation_analytics,
-    q47_r11_econometrics,
-    q48_r12_classical_tests,
-    q49_r12_regression_diag,
-    q50_r12_monitoring_survival,
-    q51_r12_sketch_er,
-    q52_r12_calibration_inequality,
-    q53_r12_graph_jl_rank,
-    q54_r12_stylometry_anova,
-    q55_r12_readability_order,
-    q56_r12_moments_tail,
-    q57_r13_gof_distance,
-    q58_r13_survival_extremes,
-    q59_r13_trend_changepoint,
-    q60_r13_rank_tests,
-    q61_r13_categorical_diversity,
-    q62_r13_rankers_moments,
-    q63_r13_tv_kuiper_risk,
-    q64_r13_robust_estimators,
-    q65_r13_mmd_nominal,
-    q66_r13_theta_moran_zenga,
-    q67_r13_lepage_kpss_cmh,
-    q68_r14_twosample_rank,
-    q69_r14_partition_agreement,
-    q70_r14_ranker_eval,
-    q71_r14_queueing,
-    q72_r14_forecast_scores,
-    q73_r14_survey_sampling,
-    q74_r14_assoc_measures,
-    q75_r14_stream_interval,
-    q76_r14_richness_bi,
-    q77_r14_graph_iv_matryoshka,
-    q78_r14_bivariate_daily,
-    q79_r14_regression_diag2,
-    q80_r14_fits_influence,
-    q81_r15_model_selection,
-    q82_r15_streaming_pipeline,
-    q83_r15_operations,
-    q84_r15_categorical2,
-    q85_r15_ecology,
-    q86_r15_classifier_eval,
-    q87_r15_cluster_validity,
-    q88_r15_timeseries_econ,
-    q89_r15_bi_fits,
-    q90_r15_text2,
-    q91_r15_graph2,
-    q92_r15_robust2,
-    q93_r15_mixed,
-    q94_r15_reliability,
-    q95_r15_survival3,
-    q96_r15_actuarial_index,
-    q97_r15_pointprocess,
-    q98_r15_social_choice,
-    q99_r15_dependence,
-    q100_r15_robust_lines,
-    q101_r15_queueing2,
-    q102_r15_causal,
-    q103_r15_risk,
-    q104_r15_evt,
-    q105_r15_sql_geometry,
-    q106_r15_markov2,
-    q107_r15_compositional,
-    q108_r15_monitoring3,
-    q109_r15_ml_eng,
-    q110_r15_panel_audit,
-    q111_r15_final_mix,
-    q112_r15_count_laws,
-    _window,
-)
-
-
-# name -> owning submodule, filled lazily on first lookup (ADVICE r14:
-# the bare scan was O(modules) on EVERY package-attribute miss, and
-# bench.py hits `queries.t` thousands of times). Delegation stays LIVE:
-# the cache stores the owner module, never the value, so rebound
-# submodule globals (e.g. _registry._FAN_OUT_WARNED) are re-read through
-# getattr on every access. The `name in vars(owner)` revalidation keeps
-# last-module-wins correct even if a cached owner later drops the name.
-_OWNER: dict = {}
-
-
-def __getattr__(name):
-    if not name.startswith('__'):
-        _m = _OWNER.get(name)
-        if _m is not None and name in vars(_m):
-            return getattr(_m, name)
-        for _m in reversed(_MODULES):
-            if name in vars(_m):
-                _OWNER[name] = _m
-                return getattr(_m, name)
-    raise AttributeError(
-        f"module {__name__!r} has no attribute {name!r}")
-
-
-def __dir__():
-    names = set(globals())
-    for _m in _MODULES:
-        names.update(k for k in vars(_m) if not k.startswith('__'))
-    return sorted(names)
+# The names used outside the package, imported explicitly from their
+# owning submodules.
+from ._registry import CATALOG, SERIAL, t  # noqa: F401
+from .q17_flagship import flagship  # noqa: F401
+from .q27_r9_retrieval import _AO_W  # noqa: F401
+from .q30_r9_robust_ml import _HUBER_D6  # noqa: F401

@@ -207,6 +207,10 @@ class Query:
 
 
 CATALOG: dict[str, Query] = {}
+# Entries that set session confs while they build. A caller building
+# many entries on one session builds these alone, before any pool, so
+# no other entry is built under their settings.
+SERIAL = ("io_bucketed_join_gate",)
 
 
 def register(name: str, oracle: str | None = None, bench: bool = False) -> None:

@@ -2595,7 +2595,7 @@ def _diojsonl(spark, sf_dir):
     """S1 Bronze JSONL scan, oracle-verified end to end: serialize
     customer to nested JSON lines ({id, info:{segment, bal}}), plant 3
     malformed lines, re-read with the explicit schema + PERMISSIVE
-    corrupt capture (io/readers.read_bronze_json), and project the
+    corrupt capture (io/readers.read_any(..., "json", schema)), and project the
     nested fields back flat via dot paths (N7). The oracle is the
     source table itself plus exactly 3 corrupt markers — proving the
     JSONL round-trip is lossless AND that bad lines land in
@@ -2606,7 +2606,7 @@ def _diojsonl(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from ..io.readers import read_bronze_json
+    from ..io.readers import read_any
 
     scratch = _scratch("redp_jsonl_gate")
     shutil.rmtree(scratch, ignore_errors=True)
@@ -2641,7 +2641,7 @@ def _diojsonl(spark, sf_dir):
             ),
         ]
     )
-    back = read_bronze_json(spark, [scratch + "/good", scratch + "/bad"], schema)
+    back = read_any(spark, [scratch + "/good", scratch + "/bad"], "json", schema)
     return back.select(
         F.col("id"),
         F.col("info.segment").alias("segment"),

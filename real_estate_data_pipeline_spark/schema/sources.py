@@ -14,8 +14,9 @@ Divergences (documented per SURVEY §7.4):
 - dates/timestamps stay TimestampType internally (the reference
   stringifies them mid-pipeline, silver_etl_script.py:892-908); we
   stringify only at the sink boundary.
-- every source has an explicit StructType read schema (the reference
-  infers and then defensively probes df.columns).
+- every source declares its Bronze record schema (``SourceSpec.bronze``,
+  a DDL string of just the fields the spec reads); the reference infers
+  one per file and then defensively probes df.columns.
 """
 
 from __future__ import annotations
@@ -102,12 +103,19 @@ class SourceSpec:
     """Declarative description of one Bronze source.
 
     ``mapping``: source column -> canonical column (simple renames).
+    ``bronze``: DDL schema of a Bronze JSON line: the fields ``mapping``
+    and ``derived`` read, plus the ``timestamp`` and ``process_run_id``
+    stamps. Each field is typed wide enough for every token shape
+    FIXTURES.md documents for it (a number-or-string field is STRING, a
+    number that may be int or float is DOUBLE); a token that does not fit
+    parses to NULL in its own row only.
     ``derived``: canonical column -> fn(df) -> Column for nested/special
     extractions (the reference's per-source if-ladders,
     silver_etl_script.py:179-344, become data here)."""
 
     name: str
     mapping: dict[str, str]
+    bronze: str
     derived: dict[str, Callable[[DataFrame], Column]] = field(default_factory=dict)
 
 
@@ -136,6 +144,16 @@ CHOTOT = SourceSpec(
         "project_images": "images",
         "facilities": "facilities",
     },
+    # facilities arrives as an array, a JSON-array string or a bare
+    # string: read as text, conform's N9 coercion parses it. The areas
+    # arrive as a number or a number-as-string: read as text, conform
+    # casts them to double
+    bronze="""project_oid STRING, project_name STRING, introduction STRING,
+        full_address STRING, ward_name STRING, area_name STRING, region_name STRING,
+        area_total STRING, area_construction STRING, sell_price_lower DOUBLE,
+        sell_price_higher DOUBLE, price_lowest_per_m2 DOUBLE, price_highest_per_m2 DOUBLE,
+        investor_name STRING, project_images ARRAY<STRING>, facilities STRING, geo STRING,
+        `timestamp` STRING, process_run_id STRING""",
     derived={
         # F9 geo split: "lat,lng" string. Ref: transformation_utils.py:754-780
         "latitude": lambda df: _chotot_geo(df)[0],
@@ -160,6 +178,17 @@ MEEYPROJECT = SourceSpec(
         "totalFloor": "total_floor",
         "totalApartment": "total_property",
     },
+    bronze="""_id STRING, name STRING, description STRING, address STRING,
+        totalArea DOUBLE, lowestPriceByProduct DOUBLE, highestPriceByProduct DOUBLE,
+        lowestPriceByM2 DOUBLE, highestPriceByM2 DOUBLE, totalBuilding DOUBLE,
+        totalFloor DOUBLE, totalApartment DOUBLE,
+        location STRUCT<coordinates: ARRAY<DOUBLE>>,
+        ward STRUCT<translation: ARRAY<STRUCT<name: STRING>>>,
+        district STRUCT<translation: ARRAY<STRUCT<name: STRING>>>,
+        city STRUCT<translation: ARRAY<STRUCT<name: STRING>>>,
+        investorRelated STRUCT<investor: STRUCT<name: STRING>>,
+        utilities STRUCT<basicUtilities: ARRAY<STRING>>, images ARRAY<STRUCT<url: STRING>>,
+        `timestamp` STRING, process_run_id STRING""",
     derived={
         # N5 GeoJSON [lon,lat]. Ref: transformation_utils.py:783-809
         "longitude": lambda df: F.when(
@@ -220,6 +249,16 @@ ONEHOUSING = SourceSpec(
         "max_unit_price": "max_unit_price",
         "developer_name": "investor_name",
     },
+    # handover_date_from arrives as unix millis or as an ISO date string
+    bronze="""id STRING, name STRING, description STRING, address STRING, ward STRING,
+        district STRING, city STRING, lat_cdnt DOUBLE, long_cdnt DOUBLE, blocks BIGINT,
+        total_property BIGINT, number_living_floor BIGINT, min_selling_price DOUBLE,
+        max_selling_price DOUBLE, min_unit_price DOUBLE, max_unit_price DOUBLE,
+        developer_name STRING, total_area DOUBLE,
+        albums ARRAY<STRUCT<images: ARRAY<STRING>>>, quality_indexes ARRAY<STRUCT<name: STRING>>,
+        insight_by_bedroom ARRAY<STRUCT<number_of_bedroom: STRING, min_price: DOUBLE,
+            max_price: DOUBLE, min_carpet_area: DOUBLE, max_carpet_area: DOUBLE>>,
+        handover_date_from STRING, `timestamp` STRING, process_run_id STRING""",
     derived={
         # M7 hectares -> m2. Ref: silver_etl_script.py:214-219
         "total_area": lambda df: F.col("total_area") * F.lit(10000.0),

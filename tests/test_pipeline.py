@@ -141,6 +141,86 @@ def test_map_source_missing_input_is_null_but_bugs_raise(spark, tmp_path):
         pipeline.map_source(df, dataclasses.replace(spec, derived={"latitude": broken}))
 
 
+def test_read_bronze_json_submits_no_job(spark, tmp_path):
+    """Reading Bronze is lazy: the source's declared schema parses the
+    lines later, so no schema-inference job runs at read time."""
+    path = write_bronze(str(tmp_path))
+    sc = spark.sparkContext
+    group = "test-read-bronze-json"
+    sc.setJobGroup(group, "read_bronze_json")
+    try:
+        for name in SOURCE_SPECS:
+            read_bronze_json(spark, f"{path}/{name}.jsonl")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_bronze_drift_nulls_one_field_of_one_row(spark, tmp_path):
+    """A meeyproject_api file where one row's ``ward`` is a plain string
+    instead of the declared struct: that field is NULL in that row only,
+    the good row keeps its ward, a malformed line is quarantined, and
+    blank lines yield no row, so the counters are exact."""
+    base = {"location": {"type": "Point", "coordinates": [105.79, 21.03]},
+            "city": {"translation": [{"name": "Hà Nội"}]},
+            "timestamp": "2024-01-10T08:30:00", "spider_name": "meeyproject_api",
+            "process_run_id": "run1"}
+    drifted = {**base, "_id": "d1", "name": "Dự án Trôi", "ward": "Tây Mỗ"}
+    good = {**base, "_id": "d2", "name": "Dự án Tốt",
+            "ward": {"translation": [{"name": "Bến Nghé"}]}}
+    path = tmp_path / "meeyproject_api.jsonl"
+    path.write_text("\n".join([
+        json.dumps(drifted, ensure_ascii=False),
+        json.dumps(good, ensure_ascii=False),
+        '{"_id": "d3", "name": ',
+        "",
+        " \t ",
+    ]) + "\n", encoding="utf-8")
+    bronze = {"meeyproject_api": read_bronze_json(spark, str(path))}
+    pipeline = SilverPipeline(spark)
+
+    mapped = pipeline.map_all(bronze).collect()
+    assert len(mapped) == 3  # the two blank lines yield no row
+    by_id = {r["source_id"]: r for r in mapped}
+    assert (by_id["d1"]["ward"], by_id["d1"]["project_name"], by_id["d1"]["city"]) == (
+        None, "Dự án Trôi", "Hà Nội")
+    assert by_id["d1"]["latitude"] == pytest.approx(21.03)
+    assert by_id["d2"]["ward"] == "Bến Nghé"
+
+    result = pipeline.run(bronze)
+    try:
+        assert {r["source_id"]: r["ward"] for r in result.silver.collect()} == {
+            "d1": None, "d2": "Bến Nghé"}
+        assert [(r["source_id"], r["reject_reason"]) for r in result.quarantine.collect()] == [
+            (None, "missing_required:source_id")]
+        assert (result.counters["valid"], result.counters["quarantined"]) == (2, 1)
+    finally:
+        result.release()
+
+
+def test_bronze_number_or_string_tokens_survive(spark, tmp_path):
+    """Fields documented as number-or-string (chotot areas) keep their
+    value in either shape, and Meey counts accept int and float tokens."""
+    chotot = [
+        {"project_oid": "c1", "project_name": "A", "area_total": "300000.5",
+         "area_construction": "1200"},
+        {"project_oid": "c2", "project_name": "B", "area_total": 250.25,
+         "area_construction": 900},
+    ]
+    meey = [{"_id": "m1", "name": "C", "totalBuilding": 3, "totalFloor": 35.0,
+             "totalApartment": 40000}]
+    for name, rows in (("chotot_api", chotot), ("meeyproject_api", meey)):
+        (tmp_path / f"{name}.jsonl").write_text("\n".join(map(json.dumps, rows)) + "\n")
+    bronze = {name: read_bronze_json(spark, str(tmp_path / f"{name}.jsonl"))
+              for name in ("chotot_api", "meeyproject_api")}
+    got = {r["source_id"]: r for r in SilverPipeline(spark).map_all(bronze).collect()}
+    assert (got["c1"]["total_area"], got["c1"]["construction_area"]) == (300000.5, 1200.0)
+    assert (got["c2"]["total_area"], got["c2"]["construction_area"]) == (250.25, 900.0)
+    assert (got["m1"]["total_block"], got["m1"]["total_floor"], got["m1"]["total_property"]) == (
+        3, 35, 40000)
+
+
 # ---------------------------------------------------------------------------
 # SCD2 across two runs (SURVEY §5.3)
 # ---------------------------------------------------------------------------

@@ -773,7 +773,7 @@ def test_every_catalog_query_plans_clean(spark, sf_small):
     that silently stop scaling at 100 TB."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from real_estate_data_pipeline_spark.queries import CATALOG as _ALL
+    from real_estate_data_pipeline_spark.queries import CATALOG as _ALL, SERIAL
 
     # r16: the catalog is 800+ queries and each lint is driver-side
     # py4j work (plan build + plan walk; the eager gate entries also run
@@ -793,7 +793,10 @@ def test_every_catalog_query_plans_clean(spark, sf_small):
                 return name, f"unbounded global window: {gw[0]}"
         return name, None
 
+    # entries that set session confs lint alone, before the pool, so no
+    # other entry is linted under their settings
+    results = [_lint(n) for n in SERIAL if n in _ALL]
     with ThreadPoolExecutor(max_workers=24) as pool:
-        results = list(pool.map(_lint, sorted(_ALL)))
+        results += pool.map(_lint, [n for n in sorted(_ALL) if n not in SERIAL])
     offenders = {n: why for n, why in results if why is not None}
     assert not offenders, f"scale-unsafe plans: {offenders}"

@@ -32,9 +32,6 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 OUT = os.path.join(ROOT, "plans", "fingerprints.tsv")
 WORKERS = 4
-# Entries that set session confs while they build; they run alone,
-# before the pool, so no other entry is built under their settings.
-SERIAL = ("io_bucketed_join_gate",)
 
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
@@ -86,7 +83,7 @@ def main() -> None:
     os.chdir(ROOT)  # the io_python_* entries resolve their source relative to the cwd
     from conftest import SF_SMALL
 
-    from real_estate_data_pipeline_spark.queries import CATALOG
+    from real_estate_data_pipeline_spark.queries import CATALOG, SERIAL
     from real_estate_data_pipeline_spark.session import get_session
 
     spark = get_session(
