@@ -71,15 +71,24 @@ def test_compact_crash_between_renames(spark, tmp_path):
 
 
 def test_vacuum_snapshots(spark, tmp_path):
+    """vacuum(keep=2) keeps the two newest versions readable with their
+    rows and makes every older one unreadable."""
     t = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v"], order_col="ts")
     for i in range(4):
         df = spark.createDataFrame([("a", float(i), f"2024-01-0{i+1}")], "k string, v double, ts string")
         t.merge(df, batch_ts=F.lit(f"2024-01-0{i+1} 12:00:00"))
-    versions = [e for e in os.listdir(str(tmp_path / "t")) if e.startswith("v") and e[1:].isdigit()]
-    assert len(versions) == 4
-    assert t.vacuum(keep=2) == ["v1", "v2"]
+    assert t.history() == [1, 2, 3, 4]
+
+    def rows(v):
+        return sorted(map(tuple, t.read(v).collect()), key=repr)
+
+    kept = {v: rows(v) for v in (3, 4)}
+    t.vacuum(keep=2)
     assert t.history() == [3, 4]
+    assert {v: rows(v) for v in (3, 4)} == kept
     assert t.read().filter("is_current").first()["v"] == 3.0  # current unharmed
+    with pytest.raises(FileNotFoundError):
+        t.read(1)
 
 
 def test_scd2_change_data_feed(spark, tmp_path):
