@@ -5,8 +5,10 @@
   clustering keys (the data-layout effect of Z-ORDER for one key prefix:
   min/max stats become selective, so scan-level skipping works).
 
-VACUUM of superseded snapshot versions is ``Scd2Table.vacuum``: the
-snapshot layout is that class's business.
+VACUUM of an SCD2 table is ``Scd2Table.vacuum``: it keeps the newest
+versions readable, writes a base at the oldest kept one when needed, and
+drops the bases and deltas no kept version reads. The merge-on-read
+layout is that class's business.
 
 On Delta/Iceberg these become one-line SQL calls; the interface stays.
 """

@@ -12,7 +12,7 @@ and the idiomatic Spark shape for any lookup table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ops import functions as X
@@ -37,30 +37,37 @@ class GoldPipeline:
         self.spark = spark
 
     def centroid_dim(self) -> DataFrame:
-        """S8 literal-rows dimension table (replaces UDF X1)."""
-        return self.spark.createDataFrame(
-            DISTRICT_CENTROIDS, "city string, district string, centroid_lat double, centroid_lon double"
+        """S8 literal-rows dimension table (replaces UDF X1), as an inline
+        VALUES table: a local relation, so broadcasting it runs no job."""
+        rows = ", ".join(
+            f"({_sql_str(city)}, {_sql_str(district)}, {lat!r}D, {lon!r}D)"
+            for city, district, lat, lon in DISTRICT_CENTROIDS
+        )
+        return self.spark.sql(
+            f"SELECT * FROM VALUES {rows} AS t(city, district, centroid_lat, centroid_lon)"
         )
 
     # -- price imputation (A1 + J2 + M9) -------------------------------------
     def impute_prices(self, df: DataFrame) -> DataFrame:
         """Median by (city, district), fallback median by city, fallback
-        constant — aggregate -> broadcast -> left join -> coalesce.
-        Ref: data_enhancement.py:47-143."""
-        price = F.col("avg_selling_price")
-        district_stats = (
-            df.filter(price.isNotNull())
-            .groupBy("city", "district")
-            .agg(F.median("avg_selling_price").alias("district_median"))
-        )
-        city_stats = (
-            df.filter(price.isNotNull())
-            .groupBy("city")
-            .agg(F.median("avg_selling_price").alias("city_median"))
-        )
-        out = (
-            df.join(F.broadcast(district_stats), ["city", "district"], "left")
-            .join(F.broadcast(city_stats), ["city"], "left")
+        constant -> coalesce. Ref: data_enhancement.py:47-143.
+
+        Both medians are window aggregates: one shuffle by city serves
+        both windows, since rows clustered by city are clustered by
+        (city, district) too. A GROUPING SETS aggregate joined back
+        twice planned two shuffles and two broadcasts here (Catalyst
+        pushes each join's level and not-null filters below the
+        aggregate, so the two joins share no exchange). A NULL city or
+        district gets no median of that level, as a join would give."""
+        price, city, district = F.col("avg_selling_price"), F.col("city"), F.col("district")
+        out = df.withColumn(
+            "city_median", F.when(city.isNotNull(), F.median(price).over(Window.partitionBy("city")))
+        ).withColumn(
+            "district_median",
+            F.when(
+                city.isNotNull() & district.isNotNull(),
+                F.median(price).over(Window.partitionBy("city", "district")),
+            ),
         )
         imputed, flag = X.impute_cascade(
             price, F.col("district_median"), F.col("city_median"), F.lit(80_000_000.0)
@@ -182,3 +189,8 @@ class GoldPipeline:
         out = self.assign_quality_tiers(out)
         cols = [c for c in self.FEATURES if c in out.columns]
         return out.select(*cols)
+
+
+def _sql_str(s: str) -> str:
+    """SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -19,8 +19,13 @@ What the reference does in ~1100 lines of script, and where we differ:
 Spark jobs per Bronze day, traced on perfbench's ``pipeline_daily``
 (three sources, a 1.5k-row day into a seeded SCD2 table; each count is
 that step's own jobs): reading the sources 0, ``run`` 3 (quality checks
-and counters included), the SCD2 merge about 10, the Gold rebuild 6.
-The reference fires ~25 count() jobs for its counters alone.
+and counters included), the SCD2 merge 8, the Gold rebuild 4. The
+merge's 8 run the lazy Silver lineage and one write: cleanse's dedup
+shuffle twice (the rows and the outlier statistics each plan their
+own), the statistics' shuffle and broadcast, the merge's dedup shuffle,
+the broadcasts of the table's closed preimages and of its current
+rows, and the delta write. The reference fires ~25 count() jobs for
+its counters alone.
 """
 
 from __future__ import annotations

@@ -2492,7 +2492,7 @@ def _scd2cdf(spark, sf_dir):
     downstream incremental consumers (ops/incremental.merge_rollups)
     read instead of diffing 100 TB snapshots. delta-spark jars remain
     absent in this env (re-probed; see README), so the feed rides the
-    same snapshot-versioned parquet store as the merges themselves."""
+    same merge-on-read parquet deltas the merges write."""
     import shutil
 
     from ..io.scd2 import Scd2Table

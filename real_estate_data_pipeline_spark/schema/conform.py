@@ -10,6 +10,7 @@ Coercions handled (SURVEY §2.11 N9/N11 + cast table §1.3):
 - plain string -> array<string>: JSON-parse if it looks like a JSON
   array, else wrap as single element
 - scalar type mismatches    -> cast (null on failure via try semantics)
+- same type up to nullability -> one plain cast
 - struct arrays             -> per-field cast through transform
 """
 
@@ -63,6 +64,27 @@ def _coerce_struct_array(target_el: T.StructType, actual: T.DataType, col: Colum
     return F.transform(col, build)
 
 
+def _widens(actual: T.DataType, target: T.DataType) -> bool:
+    """True when ``actual`` equals ``target`` except that ``target`` allows
+    NULL where ``actual`` does not (a cast that changes no value)."""
+    if isinstance(actual, T.ArrayType) and isinstance(target, T.ArrayType):
+        return (target.containsNull or not actual.containsNull) and _widens(
+            actual.elementType, target.elementType
+        )
+    if isinstance(actual, T.MapType) and isinstance(target, T.MapType):
+        return (
+            (target.valueContainsNull or not actual.valueContainsNull)
+            and _widens(actual.keyType, target.keyType)
+            and _widens(actual.valueType, target.valueType)
+        )
+    if isinstance(actual, T.StructType) and isinstance(target, T.StructType):
+        return len(actual.fields) == len(target.fields) and all(
+            a.name == t.name and (t.nullable or not a.nullable) and _widens(a.dataType, t.dataType)
+            for a, t in zip(actual.fields, target.fields)
+        )
+    return actual == target
+
+
 def conform(df: DataFrame, target: T.StructType) -> DataFrame:
     """Project ``df`` onto ``target``: exact column set, exact types."""
     actual = {f.name: f.dataType for f in df.schema.fields}
@@ -75,6 +97,10 @@ def conform(df: DataFrame, target: T.StructType) -> DataFrame:
         a = actual[f.name]
         if a == f.dataType:
             cols.append(col.alias(f.name))
+        elif _widens(a, f.dataType):
+            # a plain cast: Catalyst's SimplifyCasts drops it where only
+            # the array's containsNull differs
+            cols.append(col.cast(f.dataType).alias(f.name))
         elif isinstance(f.dataType, T.ArrayType) and isinstance(f.dataType.elementType, T.StringType):
             cols.append(_coerce_to_string_array(a, col).alias(f.name))
         elif isinstance(f.dataType, T.ArrayType) and isinstance(f.dataType.elementType, T.StructType):

@@ -91,6 +91,85 @@ def test_vacuum_snapshots(spark, tmp_path):
         t.read(1)
 
 
+def _two_day_table(spark, path):
+    t = Scd2Table(spark, path, key="k", tracked=["v"], order_col="ts")
+    days = [
+        spark.createDataFrame([("a", 1.0, "d1"), ("b", 2.0, "d1")], "k string, v double, ts string"),
+        spark.createDataFrame([("a", 9.0, "d2"), ("c", 3.0, "d2")], "k string, v double, ts string"),
+    ]
+    return t, days
+
+
+def test_scd2_merge_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every job a merge submits, the first merge's and a later one's,
+    runs in the job group the caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    t, days = _two_day_table(spark, str(tmp_path / "t"))
+
+    def fence(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1], 1).count()
+        return tracker.getJobIdsForGroup(group)[0]
+
+    try:
+        before = fence("scd2-jobs-before")
+        merged = set()
+        for i, day in enumerate(days):
+            group = f"scd2-jobs-merge{i + 1}"
+            sc.setJobGroup(group, group)
+            t.merge(day, batch_ts=F.lit(f"2024-01-0{i + 1} 12:00:00"))
+            jobs = set(tracker.getJobIdsForGroup(group))
+            assert jobs, group
+            merged |= jobs
+        after = fence("scd2-jobs-after")
+    finally:
+        sc.setJobGroup(None, None)
+    assert merged == set(range(before + 1, after))
+
+
+def test_scd2_fresh_instance_reads_without_a_schema_job(spark, tmp_path):
+    """The marker carries the table's schema, so a new Scd2Table on an
+    existing path builds its reads without a parquet footer job."""
+    sc = spark.sparkContext
+    t, days = _two_day_table(spark, str(tmp_path / "t"))
+    for i, day in enumerate(days):
+        t.merge(day, batch_ts=F.lit(f"2024-01-0{i + 1} 12:00:00"))
+    fresh = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v"], order_col="ts")
+    try:
+        sc.setJobGroup("scd2-fresh-read", "scd2-fresh-read")
+        reads = [fresh.read(), fresh.read(1), fresh.read_as_of("2024-01-01 18:00:00"),
+                 fresh.read_changes(1)]
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("scd2-fresh-read") == []
+    snap = ["k", "v", "ts", "is_current", "valid_from", "valid_to"]
+    assert [r.columns for r in reads] == [snap] * 3 + [["k", "v", "ts", "_change_type", "_commit_version"]]
+    assert sorted((r["k"], r["v"]) for r in reads[0].filter("is_current").collect()) == [
+        ("a", 9.0), ("b", 2.0), ("c", 3.0)
+    ]
+
+
+def test_scd2_reads_over_many_deltas_union_listing_batches(spark, tmp_path, monkeypatch):
+    """Reads over more delta dirs than one listing batch take union
+    scans of at most a batch each and return the same rows."""
+    from real_estate_data_pipeline_spark.io import scd2
+
+    t = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v"], order_col="ts")
+    for i in range(4):
+        df = spark.createDataFrame([("a", float(i), "d"), (f"n{i}", 0.0, "d")], "k string, v double, ts string")
+        t.merge(df, batch_ts=F.lit(f"2024-01-0{i + 1} 12:00:00"))
+
+    def rows():
+        return [sorted(map(tuple, df.collect()), key=repr)
+                for df in (t.read(), t.read(2), t.read_changes(1))]
+
+    whole = rows()
+    monkeypatch.setattr(scd2, "_LIST_BATCH", 2)
+    assert rows() == whole
+    assert (len(whole[0]), len(whole[2])) == (5 + 3, 2 + 3 * 3)
+
+
 def test_scd2_change_data_feed(spark, tmp_path):
     """CDF analog: every merge persists its change rows; the feed
     replays the table's history (insert / update_preimage /

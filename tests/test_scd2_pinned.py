@@ -19,14 +19,14 @@ import json
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
 
 from bronze import BASE_DATE, SOURCES, TRACKED, BronzeGenerator, write_day  # noqa: E402
 
-from real_estate_data_pipeline_spark.io import readers  # noqa: E402
-from real_estate_data_pipeline_spark.io.scd2 import Scd2Table  # noqa: E402
+from real_estate_data_pipeline_spark.io import readers, scd2  # noqa: E402
 from real_estate_data_pipeline_spark.pipeline.silver import SilverPipeline  # noqa: E402
 
 SEED = 11
@@ -98,8 +98,8 @@ def value_hash(value) -> str:
 def observe(spark, root: str) -> dict[str, str]:
     """Merge the generator's days into a fresh table and hash every read."""
     gen = BronzeGenerator(SEED)
-    table = Scd2Table(spark, os.path.join(root, "silver"), key="universal_id",
-                      tracked=TRACKED, order_col="ingested_at_utc")
+    table = scd2.Scd2Table(spark, os.path.join(root, "silver"), key="universal_id",
+                           tracked=TRACKED, order_col="ingested_at_utc")
     out: dict[str, str] = {}
     counters = []
     for d in range(DAYS):
@@ -125,5 +125,11 @@ def observe(spark, root: str) -> dict[str, str]:
     return out
 
 
-def test_scd2_reads_match_pinned_hashes(spark, tmp_path):
+@pytest.mark.parametrize("fraction", [scd2.COMPACT_FRACTION, 0.0], ids=["default", "compact_every_merge"])
+def test_scd2_reads_match_pinned_hashes(spark, tmp_path, monkeypatch, fraction):
+    """The same hashes whether reads resolve deltas over the first
+    merge's rows or over a base written at every merge."""
+    monkeypatch.setattr(scd2, "COMPACT_FRACTION", fraction)
     assert observe(spark, str(tmp_path)) == PINNED
+    bases = json.load(open(os.path.join(str(tmp_path), "silver", "_CURRENT")))["bases"]
+    assert (len(bases) == DAYS - 1) == (fraction == 0.0)
