@@ -71,12 +71,6 @@ def _widens(actual: T.DataType, target: T.DataType) -> bool:
         return (target.containsNull or not actual.containsNull) and _widens(
             actual.elementType, target.elementType
         )
-    if isinstance(actual, T.MapType) and isinstance(target, T.MapType):
-        return (
-            (target.valueContainsNull or not actual.valueContainsNull)
-            and _widens(actual.keyType, target.keyType)
-            and _widens(actual.valueType, target.valueType)
-        )
     if isinstance(actual, T.StructType) and isinstance(target, T.StructType):
         return len(actual.fields) == len(target.fields) and all(
             a.name == t.name and (t.nullable or not a.nullable) and _widens(a.dataType, t.dataType)

@@ -244,6 +244,23 @@ def test_n4_first_last_empty(spark):
     assert rows[1]["f"] is None and rows[1]["l"] is None
 
 
+def test_conform_nullability_only_difference_adds_no_transform(spark):
+    """An array<struct> that differs from the target only in allowing
+    NULL elements is cast as a whole, and the optimizer drops the cast:
+    the plan keeps the source's one lambda and gains none."""
+    el = T.StructType([T.StructField("x", T.IntegerType()), T.StructField("y", T.StringType())])
+    target = T.StructType([T.StructField("a", T.ArrayType(el))])
+    df = spark.range(2).select(
+        F.transform(F.array(F.col("id").cast("int")),
+                    lambda v: F.struct(v.alias("x"), v.cast("string").alias("y"))).alias("a")
+    )
+    assert not df.schema["a"].dataType.containsNull
+    out = conform(df, target)
+    assert out.schema["a"].dataType == target["a"].dataType
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("lambdafunction") == 1
+    assert [r["a"][0]["y"] for r in out.orderBy(F.col("a")[0]["x"]).collect()] == ["0", "1"]
+
+
 def test_n11_conform_struct_array_to_strings(spark):
     # array<struct{name,value}> column conformed to array<string> -> 'name'
     df = spark.createDataFrame(
@@ -448,11 +465,9 @@ def test_write_range_sorted_global_order(spark, tmp_path):
 
 
 def test_scd2_merge_four_branch_emission(spark, tmp_path):
-    """r15 opt: the merge's snapshot/CDF branch unions were collapsed
-    into one conditional explode pass per write — pin all four joined-row
-    outcomes in a single merge (changed / matched-unchanged-resent /
-    absent-from-batch / brand-new) so the emission semantics stay exactly
-    the old union-of-filters semantics, counters included."""
+    """All four outcomes of a key in one merge (changed /
+    matched-unchanged-resent / absent-from-batch / brand-new): the
+    resolved snapshot, the change feed and the counters."""
     t = Scd2Table(spark, str(tmp_path / "t"), key="k", tracked=["v"], order_col="ts")
     d1 = spark.createDataFrame(
         [("chg", 1.0, "d1"), ("same", 2.0, "d1"), ("gone", 3.0, "d1")],
